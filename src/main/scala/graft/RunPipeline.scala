@@ -159,7 +159,7 @@ object RunPipeline {
         val rows = out.count()
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
-        meter.settle(name)
+        PhaseMetrics.settle(spark.sparkContext)
         val sr = meter.shuffleRead.getOrDefault(name, 0L)
         val sw = meter.shuffleWrite.getOrDefault(name, 0L)
         phaseRows += ((name, sec, rows, sr, sw, wasCommitted))

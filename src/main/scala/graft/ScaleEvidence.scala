@@ -89,7 +89,7 @@ object ScaleEvidence {
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
       results(name) = (sec, out)
-      metrics.settle(name)
+      PhaseMetrics.settle(spark.sparkContext)
       val sr = metrics.shuffleRead.getOrDefault(name, 0L)
       val sw = metrics.shuffleWrite.getOrDefault(name, 0L)
       val in = metrics.inputBytes.getOrDefault(name, 0L)

@@ -39,7 +39,7 @@ object ScaleFallback {
       val out = body
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
-      meter.settle(name)
+      PhaseMetrics.settle(spark.sparkContext)
       println(f"""{"phase":"$name","sec":$sec%.2f,"shuffle_read_mb":${meter.shuffleRead.getOrDefault(name, 0L) / 1e6}%.1f,"shuffle_write_mb":${meter.shuffleWrite.getOrDefault(name, 0L) / 1e6}%.1f}""")
       out
     }

@@ -78,7 +78,7 @@ object EncodingFixer {
 object FtfyLite {
   private val Esc: Char = 0x1b.toChar
   private val AnsiEscape =
-    java.util.regex.Pattern.compile(Esc + "\\[[0-9;]*[a-zA-Z]")
+    java.util.regex.Pattern.compile(s"$Esc\\[[0-9;]*[a-zA-Z]")
 
   private val Entities = Map(
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",

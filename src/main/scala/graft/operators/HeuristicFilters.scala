@@ -38,7 +38,8 @@ object GopherQualityFilter {
     Set("the", "be", "to", "of", "and", "that", "have", "with")
 
   def check(text: String, cfg: GopherQualityConfig = GopherQualityConfig(),
-            tokenize: String => Array[String] = Tokenizer.words): Option[String] = {
+            tokenize: String => Array[String] = Tokenizer.words,
+            splitLines: String => Array[String] = PyText.splitLines): Option[String] = {
     val words = tokenize(text)
     val nWords = words.length
 
@@ -73,7 +74,7 @@ object GopherQualityFilter {
         (PyText.pyCount(text, "...") + PyText.pyCount(text, "…")).toDouble / nWords > r))
       return Some("gopher_too_many_ellipsis")
 
-    val lines = PyText.splitLines(text)
+    val lines = splitLines(text)
     if (cfg.maxBulletLinesRatio.exists { r =>
         val bullets = lines.count { s =>
           val t = PyText.pyLStrip(s); t.startsWith("•") || t.startsWith("-")
@@ -216,9 +217,10 @@ object C4QualityFilter {
     "uses cookies", "use of cookies", "use cookies")
 
   /** Right(rewrittenText) when kept; Left(dropReason) when dropped. */
-  def check(text: String, cfg: C4QualityConfig = C4QualityConfig()): Either[String, String] = {
+  def check(text: String, cfg: C4QualityConfig = C4QualityConfig(),
+            splitLines: String => Array[String] = PyText.splitLines): Either[String, String] = {
     val lines: Array[String] =
-      if (cfg.splitParagraph) PyText.splitLines(text)
+      if (cfg.splitParagraph) splitLines(text)
       else Tokenizer.sentences(text)
     var numSentences = 0
     val kept = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -270,7 +270,9 @@ object MinhashDedup {
     * `spark.graft.uf.driverEdgeLimit` (default 5×10^6) — conf-settable so
     * harnesses and tests can route real corpora through the DISTRIBUTED
     * label-propagation path without touching call sites; the two paths are
-    * pinned label-identical in DedupSpec. */
+    * pinned label-identical in DedupSpec. The distributed path runs at
+    * most `maxIter` pointer-jump rounds plus one checking round, and throws
+    * `IllegalStateException` when that check finds no fixpoint. */
   def components(edges0: DataFrame, maxIter: Int = 30,
                  driverEdgeLimit: Long = -1L): DataFrame = {
     val spark = edges0.sparkSession
@@ -345,7 +347,10 @@ object MinhashDedup {
     var toFree: List[DataFrame] = Nil
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
+    // rounds 0 until maxIter may pointer-jump; round maxIter only checks:
+    // its neighbor-min sum proves the jumped labels a fixpoint, or the run
+    // fails instead of returning under-merged labels
+    while (!converged) {
       // neighbor-min: labels flow across every edge in both directions;
       // the sum is taken HERE, before pointer jumping, because equality
       // already proves global fixpoint — monotone rows + equal sum ⇒ no
@@ -365,14 +370,27 @@ object MinhashDedup {
         labels.unpersist()
         labels = afterNeighbors
         converged = true
+      } else if (iter == maxIter) {
+        afterNeighbors.unpersist()
+        labels.unpersist()
+        edges.unpersist()
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxIter rounds " +
+            s"(label sum still falling: $prevSum -> $aSum); raise maxIter")
       } else {
         // pointer jump: follow cluster → its own cluster. Not summed —
         // next round's neighbor-min sum is compared against THIS round's
         // pre-jump sum, which is exact: the jump is also monotone, so
         // sum(A_{r+1}) = sum(A_r) forces A_{r+1} = jump(A_r) = A_r
         // pointwise, which implies both fixpoint conditions at once.
-        val next = afterNeighbors.as("l")
-          .join(afterNeighbors.as("r"), col("l.cluster") === col("r.doc"), "left")
+        //
+        // The jump reads afterNeighbors' filled cache through a leaf: built
+        // on afterNeighbors' own plan, each round nested all earlier ones
+        // twice over, and the plan text Spark renders per query outgrew a
+        // 4 GB heap by round 5 on a 40-node path
+        val settled = org.apache.spark.sql.GraftSqlBridge.truncatePlan(afterNeighbors)
+        val next = settled.as("l")
+          .join(settled.as("r"), col("l.cluster") === col("r.doc"), "left")
           .select(col("l.doc").as("doc"),
             least(col("l.cluster"), coalesce(col("r.cluster"), col("l.cluster"))).as("cluster"))
           .cache()
@@ -383,9 +401,6 @@ object MinhashDedup {
       }
       iter += 1
     }
-    // a maxIter exit leaves the final pointer-jump cache unfilled — fill it
-    // before its parents (afterNeighbors, edges) are released below
-    if (!converged) labels.count()
     toFree.foreach(_.unpersist())
     edges.unpersist()
     labels

@@ -55,7 +55,11 @@ final class UrlFilter(
     if (blockListedDomains.contains(registeredDomain)) return Some("domain")
     if (blockListedDomains.contains(fqdn)) return Some("subdomain")
     if (blockListedUrls.contains(url)) return Some("url")
-    val urlWords: Set[String] = Normalizer.split(url, -1).toSet
+    // the word split is only read through the two word lists; the soft
+    // comparison still runs on an empty list (a threshold <= 0 drops)
+    val urlWords: Set[String] =
+      if (bannedWords.isEmpty && softBannedWords.isEmpty) Set.empty
+      else Normalizer.split(url, -1).toSet
     if (bannedWords.exists(urlWords.contains)) return Some("hard_blacklisted")
     if (softBannedWords.count(urlWords.contains) >= softWordThreshold)
       return Some("soft_blacklisted")
@@ -123,7 +127,20 @@ object UrlFilter {
   * filter of the north rule). Word lists are injected per language; the
   * regex construction mirrors the reference (substring match for ja/th/zh,
   * \W-flanked group otherwise). keep_fraction uses a seeded RNG per
-  * partition; 0.0 (default) is fully deterministic. */
+  * partition; 0.0 (default) is fully deterministic.
+  *
+  * One-pass rule: word-boundary languages do not run the regex. One
+  * Aho-Corasick pass finds each occurrence of a listed word in the lowered
+  * text and tests its two flanks (`BadWordsFilter.flanked`), which gives the
+  * verdict of `(?:\W|^)(w1|…)(?:\W|$)` under java.util.regex with
+  * UNICODE_CHARACTER_CLASS: every match of that regex is such an occurrence,
+  * and it matches wherever one has both flanks. The cost is one scan per doc
+  * whatever share of docs holds a listed word, so lists whose short entries
+  * occur inside common words (`anal` in `analysis`) pay only a flank test
+  * per occurrence. The regex still runs for a list holding a word the rule
+  * does not cover: `""` (it matches with no word present), or a word that
+  * starts with a low or ends with a high surrogate (java.util.regex
+  * compares those edges by code point, not by char). */
 final class BadWordsFilter(
     badwordsByLang: Map[String, Seq[String]],
     keepFraction: Double = 0.0,
@@ -137,6 +154,7 @@ final class BadWordsFilter(
   // languages keep the reference's \W-flanked regex semantics
   private sealed trait Matcher
   private case class RegexMatcher(p: Pattern) extends Matcher
+  private case class FlankMatcher(ac: graft.functions.AhoCorasick) extends Matcher
   private case class SubstringMatcher(ac: graft.functions.AhoCorasick) extends Matcher
   private case object NoMatcher extends Matcher
 
@@ -154,10 +172,12 @@ final class BadWordsFilter(
         case Some(words) if words.isEmpty => NoMatcher
         case Some(words) if lang == "ja" || lang == "th" || lang == "zh" =>
           SubstringMatcher(graft.functions.AhoCorasick(words))
-        case Some(words) =>
+        case Some(words) if words.exists(w =>
+            w.isEmpty || Character.isLowSurrogate(w.head) || Character.isHighSurrogate(w.last)) =>
           val joined = words.map(Pattern.quote).mkString("|")
           RegexMatcher(Pattern.compile(s"(?:\\W|^)($joined)(?:\\W|$$)",
             Pattern.UNICODE_CHARACTER_CLASS))
+        case Some(words) => FlankMatcher(graft.functions.AhoCorasick(words))
       }
     })
 
@@ -166,12 +186,46 @@ final class BadWordsFilter(
     val lang = language.getOrElse(defaultLanguage)
     val found = matcherFor(lang) match {
       case NoMatcher => false
+      case FlankMatcher(ac) =>
+        val lowered = PyText.pyLower(text)
+        ac.existsMatch(lowered)(BadWordsFilter.flanked(lowered, _, _))
       case RegexMatcher(re) => re.matcher(PyText.pyLower(text)).find()
       case SubstringMatcher(ac) => ac.containsAny(PyText.pyLower(text))
     }
     if (!found) None
     else if (keepFraction > 0.0 && rng.nextDouble() < keepFraction) None
     else Some("document_removed_with_badwords")
+  }
+}
+
+object BadWordsFilter {
+  private val WordTypes =
+    (1 << Character.NON_SPACING_MARK) | (1 << Character.ENCLOSING_MARK) |
+      (1 << Character.COMBINING_SPACING_MARK) | (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.CONNECTOR_PUNCTUATION)
+
+  /** `\w` under UNICODE_CHARACTER_CLASS, as java.util.regex defines it:
+    * alphabetic, a mark, a decimal digit, a connector, or a join control.
+    * A lone surrogate is none of these. */
+  def isWordChar(cp: Int): Boolean =
+    Character.isAlphabetic(cp) || ((WordTypes >> Character.getType(cp)) & 1) != 0 ||
+      cp == 0x200C || cp == 0x200D
+
+  /** Do `(?:\W|^)` and `(?:\W|$)` match around the occurrence `t[s, e)`?
+    * The right flank is the end of `t` or a \W code point at `e`. The left
+    * flank is the start of `t` or a \W code point ending at `s`. That code
+    * point must start where java.util.regex tries a match: a Unicode `\W`
+    * makes it step by code point, never onto the low half of a pair. A lone
+    * surrogate is \W. (`$` also matches before a final line terminator,
+    * which is \W anyway.) */
+  def flanked(t: String, s: Int, e: Int): Boolean = {
+    def nonWordEndsAtS(p: Int): Boolean = {
+      val cp = t.codePointAt(p)
+      p + Character.charCount(cp) == s && !isWordChar(cp) &&
+        !(p > 0 && Character.isLowSurrogate(t.charAt(p)) && Character.isHighSurrogate(t.charAt(p - 1)))
+    }
+    (e == t.length || !isWordChar(t.codePointAt(e))) &&
+      (s == 0 || nonWordEndsAtS(s - 1) || (s >= 2 && nonWordEndsAtS(s - 2)))
   }
 }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Lid
-import graft.text.Tokenizer
+import graft.text.{PyText, Tokenizer}
 
 /** In-flight document state flowing through the stage chain. Mirrors the
   * reference's Document + metadata (data.py:31-49) with hot metadata
@@ -33,22 +33,31 @@ final class StageContext(val partitionId: Int, cfg: PipelineConfig) {
   // Memoized tokenization: several stages tokenize the *same* doc.text
   // (Gopher quality, FineWeb, token counter). One entry suffices — a stage
   // that rewrites text (C4) naturally invalidates it by identity.
-  private var lastText: String = null
-  private var lastWords: Array[String] = null
-  def words(text: String): Array[String] = {
-    // identity fast path, then VALUE equality (r8): a rewriting stage (C4)
-    // that keeps every line emits a new-but-equal string — an equals scan
-    // (~ns per char, early-exit on first diff) is far cheaper than
-    // re-tokenizing (~µs per word) for the common all-kept doc
-    if (!(text eq lastText)) {
-      if (lastText != null && text == lastText) {
-        lastText = text
-      } else {
-        lastWords = graft.text.Tokenizer.words(text)
-        lastText = text
+  val words: String => Array[String] = new StageContext.LastText(Tokenizer.words)
+  // Memoized line split: Gopher quality and C4 quality split the same text.
+  val lines: String => Array[String] = new StageContext.LastText(PyText.splitLines)
+}
+
+object StageContext {
+  /** Caches `f` of the last text it saw. */
+  private final class LastText(f: String => Array[String]) extends (String => Array[String]) {
+    private var lastText: String = null
+    private var last: Array[String] = null
+    def apply(text: String): Array[String] = {
+      // identity fast path, then VALUE equality (r8): a rewriting stage (C4)
+      // that keeps every line emits a new-but-equal string — an equals scan
+      // (~ns per char, early-exit on first diff) is far cheaper than
+      // re-tokenizing (~µs per word) for the common all-kept doc
+      if (!(text eq lastText)) {
+        if (lastText != null && text == lastText) {
+          lastText = text
+        } else {
+          last = f(text)
+          lastText = text
+        }
       }
+      last
     }
-    lastWords
   }
 }
 
@@ -164,13 +173,13 @@ object Stages {
 
   def gopherQuality(cfg: GopherQualityConfig = GopherQualityConfig()): DocStage =
     DocStage.filter("gopher_quality") { (d, ctx) =>
-      GopherQualityFilter.check(d.text, cfg, ctx.words) }
+      GopherQualityFilter.check(d.text, cfg, ctx.words, ctx.lines) }
 
   /** C4 quality — rewrites text to the kept lines (c4_filters.py:135). */
   def c4Quality(cfg: C4QualityConfig = C4QualityConfig()): DocStage = new DocStage {
     val name = "c4_quality"
     def process(doc: PipeDoc, ctx: StageContext): PipeDoc =
-      C4QualityFilter.check(doc.text, cfg) match {
+      C4QualityFilter.check(doc.text, cfg, ctx.lines) match {
         case Right(rewritten) => doc.copy(text = rewritten)
         case Left(reason) => doc.copy(keep = false, drop_reason = reason, drop_stage = name)
       }

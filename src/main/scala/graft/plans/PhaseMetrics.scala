@@ -1,6 +1,9 @@
 package graft.plans
 
+import java.util.concurrent.TimeoutException
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftSqlBridge
 
 /** Per-phase shuffle/input attribution: job-group ids → stage ids → task
   * metrics. Extracted from ScaleEvidence (round 5) so RunPipeline's
@@ -28,22 +31,20 @@ final class PhaseMetrics extends SparkListener {
       inputBytes.merge(g, m.inputMetrics.bytesRead, (a, b) => a + b)
     }
   }
+}
 
-  private def total(name: String): Long =
-    shuffleRead.getOrDefault(name, 0L) + shuffleWrite.getOrDefault(name, 0L) +
-      inputBytes.getOrDefault(name, 0L)
-
-  /** Listener events arrive asynchronously: wait until this group's
-    * counters stop moving before sampling them (review-caught undercount). */
-  def settle(name: String, maxWaitMs: Int = 3000): Unit = {
-    var prev = -1L
-    var cur = total(name)
-    var waited = 0
-    while (cur != prev && waited < maxWaitMs) {
-      prev = cur
-      Thread.sleep(250)
-      waited += 250
-      cur = total(name)
+object PhaseMetrics {
+  /** Listener events arrive asynchronously, so counters read right after a
+    * phase can miss its last stages: drain the bus first. Every stage of a
+    * finished job has posted its completion event by then. The wait is
+    * bounded: a bus still behind after `timeoutMs` is reported on stderr
+    * and the counters are read as they stand, so the metrics never fail
+    * the job they measure. */
+  def settle(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
+    try GraftSqlBridge.drainListeners(sc, timeoutMs)
+    catch {
+      case _: TimeoutException =>
+        System.err.println(s"[phase-metrics] listener bus not drained in $timeoutMs ms; " +
+          "phase counters may be short")
     }
-  }
 }

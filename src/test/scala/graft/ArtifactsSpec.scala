@@ -16,8 +16,8 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("merger: rank files merged under a token budget, docs preserved") {
-    val in = java.nio.file.Files.createTempDirectory("mg_in").toString
-    val out = java.nio.file.Files.createTempDirectory("mg_out").toString
+    val in = tempDir("mg_in")
+    val out = tempDir("mg_out")
     writeDs(in, (1 to 20).map(i => s"document $i with a few words"))
     val files = TokenArtifacts.merge(in, out, maxTokensPerFile = 30)
     assert(files.length > 1)
@@ -31,8 +31,8 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("merger: .loss sidecars ride the shuffle in document order") {
-    val in = java.nio.file.Files.createTempDirectory("mgl_in").toString
-    val out = java.nio.file.Files.createTempDirectory("mgl_out").toString
+    val in = tempDir("mgl_in")
+    val out = tempDir("mgl_out")
     val df = (1 to 6).map(i => (s"prompt $i answer body", Seq(Seq(0, 7))))
       .toDF("text", "ranges").repartition(2)
     DocTokenizer.write(df, "text", in,
@@ -51,10 +51,10 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("merger: seeded cross-rank shuffle is deterministic") {
-    val in = java.nio.file.Files.createTempDirectory("mgs_in").toString
+    val in = tempDir("mgs_in")
     writeDs(in, (1 to 10).map(i => s"doc $i content"))
-    val o1 = java.nio.file.Files.createTempDirectory("mgs1").toString
-    val o2 = java.nio.file.Files.createTempDirectory("mgs2").toString
+    val o1 = tempDir("mgs1")
+    val o2 = tempDir("mgs2")
     TokenArtifacts.merge(in, o1, 1000000, shuffleSeed = Some(9L))
     TokenArtifacts.merge(in, o2, 1000000, shuffleSeed = Some(9L))
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$o1/00000.ds"))
@@ -63,7 +63,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("context shuffler: fixed windows, deterministic order, tail dropped") {
-    val in = java.nio.file.Files.createTempDirectory("cs_in").toString
+    val in = tempDir("cs_in")
     writeDs(in, Seq(("word " * 100).trim))
     val src = s"$in/00000.ds"
     val out = s"$in/shuffled.ds"
@@ -74,7 +74,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("megatron .bin/.idx: header magic + counts") {
-    val in = java.nio.file.Files.createTempDirectory("mt").toString
+    val in = tempDir("mt")
     writeDs(in, Seq("first doc here", "second longer document with words"))
     TokenArtifacts.writeMegatron(s"$in/00000.ds", s"$in/mega")
     val idx = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$in/mega.idx"))
@@ -105,7 +105,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("hf save_to_disk dataset reader: state.json shard order + inferred schema") {
-    val dir = java.nio.file.Files.createTempDirectory("hfds").toFile
+    val dir = new java.io.File(tempDir("hfds"))
     // one STREAM-format shard (the save_to_disk convention)
     val allocator = new RootAllocator()
     val idVec = new BigIntVector("id", allocator)
@@ -151,7 +151,7 @@ class ArtifactsSpec extends SparkSpec {
   test("hf dataset writer -> reader round trip (multi-partition, mixed types)") {
     val spark2 = SparkTestSession.session
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hfds_w").toString
+    val dir = tempDir("hfds_w")
     val df = Seq.tabulate(50)(i => (i.toLong, s"row number $i", i % 3 == 0, i * 0.5))
       .toDF("id", "text", "flag", "score").repartition(3)
     graft.sources.HfDatasetWriter.write(df, dir)
@@ -171,7 +171,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("arrow IPC reader round trip") {
-    val path = java.nio.file.Files.createTempFile("ipc", ".arrow").toString
+    val path = tempDir("ipc") + "/t.arrow"
     // write a 2-column arrow file with the arrow java API
     val allocator = new RootAllocator()
     val idVec = new BigIntVector("id", allocator)

@@ -1,9 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.text.Bpe
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends SparkSpec {
 
   test("train: classic low/lower/lowest corpus learns multi-char merges") {
     val freqs = Map("low" -> 5L, "lower" -> 2L, "lowest" -> 2L, "newer" -> 6L, "wider" -> 3L)
@@ -37,7 +36,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("PerplexityEncoder: token_ids truncated to max_model_len-1, jsonl per partition") {
-    val spark = SparkTestSession.session
     import spark.implicits._
     val texts = Seq("alpha beta gamma " * 50, "short doc here")
     val m = Bpe.trainFromTexts(texts.iterator, 30)
@@ -46,7 +44,7 @@ class BpeSpec extends AnyFunSuite {
       .select("token_ids").as[Seq[Int]].collect()
     assert(out.forall(_.length <= 16))
     assert(out.exists(_.length == 16)) // the long doc truncates
-    val dir = java.nio.file.Files.createTempDirectory("pplenc").toString
+    val dir = tempDir("pplenc")
     graft.operators.PerplexityEncoder.write(df.coalesce(1), "text", dir, m, 17)
     val lines = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
       .map(_.toString).filter(_.endsWith(".txt"))
@@ -82,12 +80,11 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("DocTokenizer .ds round trip with a real BPE model (non-trivial merges)") {
-    val spark = SparkTestSession.session
     import spark.implicits._
     val texts = Seq.tabulate(40)(i => s"shared prefix words number ${('a' + i % 7).toChar} tail tokens repeat repeat")
     val m = Bpe.trainFromTexts(texts.iterator, 40)
     assert(m.merges.length > 10)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_ds").toString
+    val dir = tempDir("bpe_ds")
     val df = texts.toDF("text").coalesce(1)
     val written = graft.operators.DocTokenizer.write(df, "text", dir,
       graft.operators.DocTokenizerConfig(shuffle = false, bpe = Some(m)))(spark)

@@ -8,7 +8,7 @@ class CoverageSpec extends SparkSpec {
   import spark.implicits._
 
   test("readers: jsonl round trip with adapter + synthesized id") {
-    val dir = java.nio.file.Files.createTempDirectory("rd").toString
+    val dir = tempDir("rd")
     Seq(("hello world", "a"), ("second doc", "b")).toDF("content", "tag")
       .coalesce(1).write.json(s"$dir/in")
     val df = Readers.jsonl(spark, s"$dir/in",
@@ -21,7 +21,7 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("writers: quarantine split by drop reason") {
-    val dir = java.nio.file.Files.createTempDirectory("wr").toString
+    val dir = tempDir("wr")
     val df = Seq((1L, "keep me", true, ""), (2L, "bad", false, "gopher_short_doc"),
       (3L, "worse", false, "lorem_ipsum")).toDF("id", "text", "keep", "drop_reason")
     Writers.withQuarantine(df, s"$dir/out", s"$dir/quarantine")
@@ -32,7 +32,7 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("compression round trips: gzip jsonl, zstd parquet (reference compression tests)") {
-    val dir = java.nio.file.Files.createTempDirectory("zstd").toString
+    val dir = tempDir("zstd")
     val df = Seq((1L, "zstd compressed doc"), (2L, "another row")).toDF("id", "text")
     Writers.jsonl(df, s"$dir/j") // gzip default, like the reference
     assert(new java.io.File(s"$dir/j").listFiles().exists(_.getName.endsWith(".json.gz")))
@@ -112,7 +112,7 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("warcText: undecodable response records are dropped, html is a string column") {
-    val dir = java.nio.file.Files.createTempDirectory("warctext").toString
+    val dir = tempDir("warctext")
     val html = "<html><body>café</body></html>"
     val http = s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n$html"
     def record(body: Array[Byte]): Array[Byte] =

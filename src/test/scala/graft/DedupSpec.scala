@@ -137,6 +137,23 @@ in culpa qui officia deserunt mollit anim id est laborum""".replace("\n", " ")
     } finally spark.conf.unset("spark.graft.uf.driverEdgeLimit")
   }
 
+  test("distributed components fail loudly when maxIter is too small") {
+    // a 200-node path settles in round 9 of the distributed loop, so 2
+    // rounds are too few
+    val edges = (1L until 200L).map(i => (i, i - 1)).toDF("doc", "rep").repartition(4)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val err = intercept[IllegalStateException] {
+      MinhashDedup.components(edges, maxIter = 2, driverEdgeLimit = 0L)
+    }
+    assert(err.getMessage.contains("2 rounds"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore, "a failed run leaves no cache")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDriver = labels(MinhashDedup.components(edges, driverEdgeLimit = 10000000L))
+    assert(viaDriver.size == 200 && viaDriver.values.forall(_ == 0L))
+    assert(labels(MinhashDedup.components(edges, driverEdgeLimit = 0L)) == viaDriver)
+  }
+
   test("exact dedup keeps min id per identical text") {
     val df = Seq((10L, "aaa"), (3L, "aaa"), (5L, "bbb")).toDF("doc_id", "text")
     val out = ExactDedup(df, "doc_id", "text").collect()

@@ -7,7 +7,7 @@ class DocTokenizerSpec extends SparkSpec {
   import spark.implicits._
 
   test("binary .ds + .index round trip (uint16), EOS-terminated docs") {
-    val dir = java.nio.file.Files.createTempDirectory("ds").toString
+    val dir = tempDir("ds")
     val df = Seq("the quick fox", "another document here with words", "third one")
       .toDF("text").coalesce(1)
     val stats = DocTokenizer.write(df, "text", dir,
@@ -23,7 +23,7 @@ class DocTokenizerSpec extends SparkSpec {
   }
 
   test("uint32 path for vocabs over 64k") {
-    val dir = java.nio.file.Files.createTempDirectory("ds32").toString
+    val dir = tempDir("ds32")
     val df = Seq("wide vocab document").toDF("text").coalesce(1)
     DocTokenizer.write(df, "text", dir, DocTokenizerConfig(vocabSize = 100000, shuffle = false))
     val docs = DocTokenizer.readRank(s"$dir/00000.ds", wide = true)
@@ -31,8 +31,8 @@ class DocTokenizerSpec extends SparkSpec {
   }
 
   test("seeded shuffle is deterministic") {
-    val dir1 = java.nio.file.Files.createTempDirectory("dsh1").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("dsh2").toString
+    val dir1 = tempDir("dsh1")
+    val dir2 = tempDir("dsh2")
     val df = (1 to 50).map(i => s"document number $i with content").toDF("text").coalesce(1)
     DocTokenizer.write(df, "text", dir1, DocTokenizerConfig(shuffle = true, seed = 7))
     DocTokenizer.write(df, "text", dir2, DocTokenizerConfig(shuffle = true, seed = 7))
@@ -74,7 +74,7 @@ class DocTokenizerSpec extends SparkSpec {
   }
 
   test(".ds.loss writing: per-token bytes, truncated docs shrink the index, DsCheck sees matching sizes") {
-    val dir = java.nio.file.Files.createTempDirectory("dsloss").toString
+    val dir = tempDir("dsloss")
     val df = Seq(
       ("prompt text answer words", Seq(Seq(0, 12))), // mask "prompt text "
       ("plain doc here", Seq.empty[Seq[Int]]))
@@ -96,7 +96,7 @@ class DocTokenizerSpec extends SparkSpec {
   }
 
   test("loss path: null ranges cells mean no masks; whole-doc range writes a zero-token doc DsCheck accepts") {
-    val dir = java.nio.file.Files.createTempDirectory("dsnull").toString
+    val dir = tempDir("dsnull")
     val df = Seq(
       ("doc with a null cell", null.asInstanceOf[Seq[Seq[Int]]]),
       ("fully masked doc", Seq(Seq(0, 1000))),

@@ -7,7 +7,7 @@ class DsCheckSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeCorpus(texts: Seq[String], parts: Int = 1): String = {
-    val dir = java.nio.file.Files.createTempDirectory("dschk").toString
+    val dir = tempDir("dschk")
     DocTokenizer.write(texts.toDF("text").repartition(parts), "text", dir,
       DocTokenizerConfig(vocabSize = 1000, shuffle = false))(spark)
     dir
@@ -84,7 +84,7 @@ class DsCheckSpec extends SparkSpec {
   test("megatron .bin/.idx pairs validate via the shared checker") {
     val dir = writeCorpus(Seq("a b c d", "e f", "g h i j k"))
     val ds = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".ds")).head
-    val mdir = java.nio.file.Files.createTempDirectory("megchk").toString
+    val mdir = tempDir("megchk")
     graft.operators.TokenArtifacts.writeMegatron(ds.getPath, s"$mdir/rank0")
     graft.operators.TokenArtifacts.writeMegatron(ds.getPath, s"$mdir/rank1")
     val reports = DsCheck.checkMegatron(spark, mdir)
@@ -96,7 +96,7 @@ class DsCheckSpec extends SparkSpec {
   test("megatron checker pins corruption: truncated .bin and doctored pointer") {
     val dir = writeCorpus(Seq("a b c d", "e f"))
     val ds = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".ds")).head
-    val mdir = java.nio.file.Files.createTempDirectory("megbad").toString
+    val mdir = tempDir("megbad")
     graft.operators.TokenArtifacts.writeMegatron(ds.getPath, s"$mdir/rank0")
     // truncate the .bin by one token: extent check must fire
     val bin = new java.io.File(mdir, "rank0.bin")

@@ -7,7 +7,7 @@ class DsDatasetSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeCorpus(texts: Seq[String], parts: Int = 1): String = {
-    val dir = java.nio.file.Files.createTempDirectory("dsds").toString
+    val dir = tempDir("dsds")
     val df = texts.toDF("text").repartition(parts)
     DocTokenizer.write(df, "text", dir,
       DocTokenizerConfig(vocabSize = 1000, shuffle = false))(spark)

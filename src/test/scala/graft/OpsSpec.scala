@@ -172,7 +172,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("Checkpoint: committed stage is not recomputed") {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val dir = tempDir("ckpt")
     val ckpt = new Checkpoint(dir)
     var computeCount = 0
     def compute() = { computeCount += 1; Seq((1L, "a"), (2L, "b")).toDF("id", "v") }
@@ -219,7 +219,7 @@ class OpsSpec extends SparkSpec {
     val mem = MemoryStream[WebPage]
     val docs = StreamingQuality.run(mem.toDF(), Seq.empty) // no filters, just PipeDoc shape
     val deduped = StreamingQuality.streamingExactDedup(docs)
-    val dir = java.nio.file.Files.createTempDirectory("sdd").toString
+    val dir = tempDir("sdd")
     val query = deduped.writeStream.format("memory").queryName("sq_dedup")
       .option("checkpointLocation", dir).outputMode("append").start()
     try {
@@ -245,7 +245,7 @@ class OpsSpec extends SparkSpec {
     // tiny TTL so a late key's (eventTime + ttl) lands below the watermark
     val deduped = StreamingQuality.streamingExactDedup(docs,
       watermarkDelay = "1 minute", stateTtlMs = 1000L)
-    val dir = java.nio.file.Files.createTempDirectory("sdd_late").toString
+    val dir = tempDir("sdd_late")
     val query = deduped.writeStream.format("memory").queryName("sq_late")
       .option("checkpointLocation", dir).outputMode("append").start()
     try {
@@ -284,7 +284,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("inference runner: chunked checkpoints, resume skips the client entirely") {
-    val dir = java.nio.file.Files.createTempDirectory("infer").toString
+    val dir = tempDir("infer")
     val docs = Seq.tabulate(20)(i => (i.toLong, s"prompt number $i with content"))
       .toDF("doc_id", "prompt").repartition(2, col("doc_id"))
     val first = InferenceRunner.run(docs, "doc_id", "prompt",
@@ -313,7 +313,7 @@ class OpsSpec extends SparkSpec {
       def generate(p: String): Either[String, String] =
         if (p.contains("number 3")) Left("boom") else Right("ok")
     }
-    val dir2 = java.nio.file.Files.createTempDirectory("infer2").toString
+    val dir2 = tempDir("infer2")
     val out2 = InferenceRunner.run(docs, "doc_id", "prompt", flaky, dir2)
       .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(out2("3") == (("", "boom")))

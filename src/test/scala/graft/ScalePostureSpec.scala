@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.plans.Checkpoint
+import graft.plans.{Checkpoint, PhaseMetrics}
 import graft.sources.WebCorpusGen
 
 /** The 100 TB posture as one named config (VERDICT r6 #8): the confs carry
@@ -29,6 +29,31 @@ class ScalePostureSpec extends SparkSpec {
     assert(!ScalePosture.sentenceDedup.prefilterDupHashes)
   }
 
+  test("phase metrics: settle returns when a listener holds the bus") {
+    val sc = spark.sparkContext
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val blocker = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        entered.countDown()
+        release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      }
+    }
+    sc.addSparkListener(blocker)
+    try {
+      spark.range(1).count()
+      assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      val t0 = System.nanoTime()
+      PhaseMetrics.settle(sc, timeoutMs = 200) // the bus is held: gives up, no throw
+      val waitedMs = (System.nanoTime() - t0) / 1e6
+      assert(waitedMs >= 150 && waitedMs < 5000, s"waited $waitedMs ms")
+    } finally {
+      release.countDown()
+      sc.removeSparkListener(blocker)
+    }
+    PhaseMetrics.settle(sc)
+  }
+
   test("lsh preconditions are loud: low dims and uncentered data throw") {
     ScalePosture.requireLshPreconditions(dims = 64, componentMeanAbsMax = 0.01)
     val lowDim = intercept[IllegalArgumentException] {
@@ -42,7 +67,7 @@ class ScalePostureSpec extends SparkSpec {
   }
 
   test("postureDedupChain composes the dedup family over committed snapshots") {
-    val out = java.nio.file.Files.createTempDirectory("posture_spec").toString
+    val out = tempDir("posture_spec")
     val ckpt = new Checkpoint(out)
     // 300 synthetic pages give the generator's planted exact twins and
     // near-dup paraphrases; its urls are unique per row, so URL RECRAWLS

@@ -487,7 +487,7 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("DsDataset.read: shuffle-free plan (range -> narrow map, windows never exchange)") {
-    val dir = java.nio.file.Files.createTempDirectory("dsplan").toString
+    val dir = tempDir("dsplan")
     DocTokenizer.write(
       (1 to 30).map(i => s"plan shape doc $i body").toDF("text").repartition(3),
       "text", dir, DocTokenizerConfig(shuffle = false))

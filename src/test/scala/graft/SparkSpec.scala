@@ -1,12 +1,32 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for operator tests. */
+/** Shared local SparkSession for operator tests, plus temp directories that
+  * are deleted after the suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   implicit lazy val spark: SparkSession = SparkTestSession.session
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh directory under the JVM's temp dir, removed in `afterAll`. */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach { d =>
+      if (Files.exists(d)) {
+        val walk = Files.walk(d)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+        finally walk.close()
+      }
+    } finally super.afterAll()
 }
 
 object SparkTestSession {

@@ -73,6 +73,24 @@ class TextKernelsSpec extends AnyFunSuite {
     assert(!ac.containsAny(""))
   }
 
+  test("aho-corasick: existsMatch offers every occurrence, overlapping and nested") {
+    import graft.functions.AhoCorasick
+    val patterns = Seq("he", "she", "his", "hers", "e", "坏词", "ushers")
+    val ac = AhoCorasick(patterns)
+    val rng = new scala.util.Random(3)
+    val texts = Seq("ushers", "", "hishers", "坏词she") ++
+      Seq.fill(500)(Seq.fill(rng.nextInt(16))("ehrsiu坏词 ".charAt(rng.nextInt(9))).mkString)
+    for (t <- texts) {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      assert(!ac.existsMatch(t) { (s, e) => seen += ((s, e)); false })
+      val all = for (p <- patterns; s <- 0 to t.length - p.length if t.startsWith(p, s))
+        yield (s, s + p.length)
+      assert(seen.sorted == all.sorted, t)
+      // the scan stops at the first accepted occurrence
+      if (all.nonEmpty) assert(ac.existsMatch(t)((s, e) => (s, e) == all.max))
+    }
+  }
+
   test("simplify_text configurable knobs: weekday/month norm, toggles, default-path equivalence") {
     import TextKernels.TextNormConfig
     // non-default knobs (reference WEEKDAYS/MONTHS patterns run on the
